@@ -27,57 +27,23 @@ def entry(spark: SparkSession) -> DataFrame:
     return tiles.select("z", "x", "y", "feature_count", "geometry_hash", "raw_bytes")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from tilemaker_spark import queries_core
+def _query_modules() -> tuple:
+    from tilemaker_spark import (queries_bytes, queries_core, queries_media,
+                                 queries_spatial, queries_text)
 
+    return (queries_core, queries_bytes, queries_text, queries_spatial,
+            queries_media)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict = {}
-    q.update(queries_core.QUERIES)
-    try:
-        from tilemaker_spark import queries_bytes
-        q.update(queries_bytes.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from tilemaker_spark import queries_text
-        q.update(queries_text.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from tilemaker_spark import queries_spatial
-        q.update(queries_spatial.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from tilemaker_spark import queries_media
-        q.update(queries_media.QUERIES)
-    except ImportError:
-        pass
+    for mod in _query_modules():
+        q.update(mod.QUERIES)
     return q
 
 
 def oracle_sql() -> dict[str, str]:
-    from tilemaker_spark import queries_core
-
     o: dict = {}
-    o.update(queries_core.ORACLES)
-    try:
-        from tilemaker_spark import queries_bytes
-        o.update(queries_bytes.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from tilemaker_spark import queries_text
-        o.update(queries_text.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from tilemaker_spark import queries_spatial
-        o.update(queries_spatial.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from tilemaker_spark import queries_media
-        o.update(queries_media.ORACLES)
-    except ImportError:
-        pass
+    for mod in _query_modules():
+        o.update(mod.ORACLES)
     return o

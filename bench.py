@@ -29,7 +29,7 @@ def main() -> None:
     n_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
     from tilemaker_spark.session import get_spark
-    from tilemaker_spark import pipeline
+    from tilemaker_spark import geocode, pipeline
 
     spark = get_spark(app_name=f"bench[{cpus}]", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -64,7 +64,7 @@ def main() -> None:
 
     # ---- q_features: geocode -> classify -> assemble throughput
     def run_features():
-        nodes, ways, rels = pipeline.build_stores(spark, docs)
+        nodes, ways, rels = geocode.geocode(docs)
         features = pipeline.build_features(nodes, ways, rels)
         return features.count()
 
@@ -76,7 +76,7 @@ def main() -> None:
     from tilemaker_spark import tileassign
 
     def run_assign():
-        nodes, ways, rels = pipeline.build_stores(spark, docs)
+        nodes, ways, rels = geocode.geocode(docs)
         features = pipeline.build_features(nodes, ways, rels)
         return tileassign.assign_base_tiles(features, 14).count()
 
@@ -85,25 +85,19 @@ def main() -> None:
     extras["assign_rows_per_sec"] = round(n_assigned / queries["q_tile_assign"], 2)
 
     # ---- q_spatial_join: cell-index point-in-polygon join (north_rule)
-    try:
-        from tilemaker_spark import spatial
+    from tilemaker_spark import spatial
 
-        n_join = timed("q_spatial_join",
-                       lambda: spatial.poi_district_join(spark, sf_dir).count())
-        extras["join_rows"] = n_join
-        extras["join_rows_per_sec"] = round(n_join / queries["q_spatial_join"], 2)
-    except ImportError:
-        pass
+    n_join = timed("q_spatial_join",
+                   lambda: spatial.poi_district_join(spark, sf_dir).count())
+    extras["join_rows"] = n_join
+    extras["join_rows_per_sec"] = round(n_join / queries["q_spatial_join"], 2)
 
     # ---- q_dedup: MinHash-LSH near-duplicate candidates over documents
-    try:
-        from tilemaker_spark import queries_text
+    from tilemaker_spark import queries_text
 
-        n_pairs = timed("q_dedup_minhash",
-                        lambda: queries_text.q_minhash_lsh_pairs(spark, sf_dir).count())
-        extras["dedup_pairs"] = n_pairs
-    except ImportError:
-        pass
+    n_pairs = timed("q_dedup_minhash",
+                    lambda: queries_text.q_minhash_lsh_pairs(spark, sf_dir).count())
+    extras["dedup_pairs"] = n_pairs
 
     total = round(sum(queries.values()), 3)
     out = {

@@ -15,11 +15,12 @@ from code), so the same file runs unchanged on local[N] and on a
         --conf spark.sql.execution.arrow.pyspark.enabled=true \
         scripts/submit_pyramid.py \
         --input /path/to/documents.parquet \
-        --out /path/to/run_dir [--mbtiles out.mbtiles] [--per-zoom-stages]
+        --out /path/to/run_dir [--mbtiles out.mbtiles]
 
 ``--out`` is the checkpoint/lineage directory (stage parquet +
 _lineage metrics); a re-submit after a failure resumes from the last
-completed stage unless --no-resume is given.
+completed stage unless --no-resume is given. The stages are features,
+base-zoom tiles, and one tiles table for all zooms (partitioned by z).
 """
 
 from __future__ import annotations
@@ -36,8 +37,6 @@ def main(argv: list | None = None) -> int:
     p.add_argument("--config", default=None, help="layer-config JSON (reference format)")
     p.add_argument("--minzoom", type=int, default=None)
     p.add_argument("--maxzoom", type=int, default=None)
-    p.add_argument("--per-zoom-stages", action="store_true",
-                   help="one resumable checkpoint per zoom (default: fused)")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--mbtiles", default=None, help="also write an MBTiles file here")
     p.add_argument("--tile-files", default=None, help="also write {z}/{x}/{y}.pbf under this dir")
@@ -81,9 +80,8 @@ def main(argv: list | None = None) -> int:
 
     t0 = time.time()
     docs = spark.read.parquet(args.input)
-    tiles = pipeline.run_pyramid(
-        spark, docs, args.out, cfg=cfg,
-        resume=not args.no_resume, per_zoom_stages=args.per_zoom_stages)
+    tiles = pipeline.run_pyramid(spark, docs, args.out, cfg=cfg,
+                                 resume=not args.no_resume)
 
     n_tiles, n_feat = tiles.selectExpr(
         "count(*)", "coalesce(sum(feature_count), 0)").first()

@@ -13,6 +13,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     from tilemaker_spark.session import get_spark
 
+    # get_spark's 24g default heap outgrows a 15 GB host mid-suite and
+    # the JVM is OOM-killed; the suite fits in 3g
+    os.environ.setdefault("SPARK_DRIVER_MEM", "3g")
     s = get_spark(app_name="tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -1,6 +1,10 @@
 """Local stand-in for the driver's correctness gate: run a Spark query
 and its DuckDB oracle on the same sf dir, compare row count, schema
-(column names) and an order-insensitive value hash."""
+(column names) and an order-insensitive value hash.
+
+Oracle results are fetched through Arrow, as the gate does — not
+through ``fetchall()``, which renders a HUGEINT ``sum()`` as a Python
+int where Arrow gives decimal128 and the hash no longer matches."""
 
 from __future__ import annotations
 
@@ -8,6 +12,7 @@ import hashlib
 import math
 
 import duckdb
+import pyarrow as pa
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -43,6 +48,20 @@ def _norm(v):
     return str(v)
 
 
+def fetch_oracle(con, sql):
+    """Run ``sql`` and return (rows, colnames) from its Arrow result.
+    A decimal128 column fails here: DuckDB types an integer ``sum()`` as
+    HUGEINT, which Arrow renders as decimal128(38, 0), so the oracle
+    must CAST such sums to BIGINT."""
+    tbl = con.execute(sql).arrow()
+    dec = [f.name for f in tbl.schema if pa.types.is_decimal(f.type)]
+    if dec:
+        raise AssertionError(
+            f"oracle returns decimal128 column(s) {dec}; CAST them to BIGINT")
+    rows = list(zip(*(c.to_pylist() for c in tbl.columns)))
+    return rows, tbl.column_names
+
+
 def value_hash(rows, colnames):
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
     lines = sorted("\x1f".join(_norm(r[i]) for i in order) for r in rows)
@@ -57,9 +76,7 @@ def compare(spark, con, fn, sql, sf_dir: str):
     sdf = fn(spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
-    res = con.execute(sql)
-    orows = res.fetchall()
-    ocols = [d[0] for d in res.description]
+    orows, ocols = fetch_oracle(con, sql)
     report = {
         "spark_rows": len(srows), "oracle_rows": len(orows),
         "spark_cols": sorted(scols), "oracle_cols": sorted(ocols),
@@ -77,9 +94,7 @@ def diff_sample(spark, con, fn, sql, sf_dir: str, limit=5):
     scols = sdf.columns
     order = sorted(range(len(scols)), key=lambda i: scols[i])
     srows = {"\x1f".join(_norm(tuple(r)[i]) for i in order) for r in sdf.collect()}
-    res = con.execute(sql)
-    orows_raw = res.fetchall()
-    ocols = [d[0] for d in res.description]
+    orows_raw, ocols = fetch_oracle(con, sql)
     oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
     orows = {"\x1f".join(_norm(r[i]) for i in oorder) for r in orows_raw}
     return {

@@ -39,6 +39,12 @@ def test_every_query_has_oracle():
     assert missing <= allowed_weak, f"queries without oracle: {missing}"
 
 
+def test_registries_have_identical_keys():
+    """Every query has an oracle and every oracle a query — a name on
+    one side only would be silently skipped by _pairs()."""
+    assert set(entrymod.queries()) == set(entrymod.oracle_sql())
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.limit(5).collect()

@@ -99,7 +99,7 @@ def test_rollup_dedup_is_attribute_aware(spark):
         rows, "tile_x INT, tile_y INT, layer STRING, kind INT, elem STRING, "
               "object_id LONG, attrs MAP<STRING,STRING>, "
               "attrs_num MAP<STRING,DOUBLE>, attrs_bool MAP<STRING,BOOLEAN>")
-    out = tileassign.rollup_to_zoom(df, 12, 14).collect()
+    out = tileassign.rollup_all_zooms(df, [12], 14).collect()
     per_obj = {}
     for r in out:
         per_obj[r["object_id"]] = per_obj.get(r["object_id"], 0) + 1
@@ -293,40 +293,32 @@ def test_stream_group_exchanges_pinned(spark, docs):
     assert "REPARTITION_BY_COL" not in eplan, eplan[:3000]
 
 
-def test_salted_encode_byte_identical(spark, docs):
-    """The salted two-stage encoder (skew shave: partition at
-    (layer, kind, attr-class) granularity, rebuild dictionaries in a
-    light second stage) must produce byte-identical tiles to the
-    single-stage path — same bytes, hashes, counts — on real pipeline
-    data with combine on (the hardest case: A5 merge runs must not
-    split across salt buckets)."""
-    from tilemaker_spark import pipeline, tileassign
-    from tilemaker_spark.config import default_config
-    from tilemaker_spark.encode import encode_zoom
+def test_run_pyramid_matches_pyramid_df(spark, tmp_path):
+    """The parquet-checkpointed pyramid (run_pyramid) and the lazy one
+    (pyramid_df) emit the same tiles: coord set, tile bytes, feature
+    counts and geometry hashes."""
+    import hashlib
 
-    features = pipeline.build_features(*__import__(
-        "tilemaker_spark.geocode", fromlist=["geocode"]).geocode(docs))
-    assigned = tileassign.assign_base_tiles(features, 14)
-    rolled = tileassign.rollup_all_zooms(assigned, [14, 12, 6], 14)
-    cfg = default_config()
-    cfg.combine_similar = True  # reference default ON — the hard case
+    from tilemaker_spark import pipeline
+    from tilemaker_spark.queries_core import load_docs
 
-    plain = encode_zoom(rolled, cfg, salted=False)
-    salted = encode_zoom(rolled, cfg, salted=True)
+    docs = load_docs(spark, SF_DIR)
+    zooms = [14, 13]
 
-    # both Python exchanges in the salted plan must be pinned
-    splan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_COL" not in splan, splan[:3000]
+    def snap(tiles):
+        return {(r["z"], r["x"], r["y"]):
+                (hashlib.sha256(bytes(r["tile"])).hexdigest(),
+                 r["feature_count"], r["geometry_hash"])
+                for r in tiles.collect()}
 
-    key = lambda r: (r["z"], r["x"], r["y"])
-    a = {key(r): (bytes(r["tile"]), r["feature_count"], r["geometry_hash"],
-                  r["raw_bytes"]) for r in plain.collect()}
-    b = {key(r): (bytes(r["tile"]), r["feature_count"], r["geometry_hash"],
-                  r["raw_bytes"]) for r in salted.collect()}
-    assert set(a) == set(b)
-    diff = [k for k in a if a[k] != b[k]]
+    staged = snap(pipeline.run_pyramid(spark, docs, str(tmp_path / "pyr"),
+                                       zooms=zooms))
+    lazy = snap(pipeline.pyramid_df(spark, docs, zooms=zooms))
+    assert set(staged) == set(lazy)
+    diff = [k for k in lazy if staged[k] != lazy[k]]
     assert not diff, f"{len(diff)} tiles differ, e.g. {diff[:5]}"
-    assert len(a) > 100  # non-trivial corpus
+    assert {k[0] for k in lazy} == set(zooms)
+    assert sum(v[1] for v in lazy.values()) > 0
 
 
 def test_bounding_box_coord_parity(spark, docs):

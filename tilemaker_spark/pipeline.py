@@ -2,11 +2,11 @@
 
 Stage graph (SURVEY.md §3.1 "Spark shape"):
 
-  documents --extract/geocode--> stores (nodes/ways/relations)
+  documents --geocode--> stores (nodes/ways/relations)
             --classify--> feature emissions
             --assemble--> features+geometry        [checkpoint]
             --assign_tiles (base zoom)-->          [checkpoint]
-            --per zoom: rollup + encode--> tiles   [checkpoint per zoom]
+            --rollup + encode (all zooms)--> tiles [checkpoint, by z]
             --package--> file-per-tile / mbtiles
 
 Each checkpoint is a Parquet table (the sandbox stand-in for Iceberg
@@ -25,7 +25,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import assemble, classify, extract, geocode, tileassign
+from . import assemble, classify, geocode, tileassign
 from .config import Config, default_config
 from .encode import encode_zoom
 
@@ -97,17 +97,6 @@ def _lineage(spark: SparkSession, df: DataFrame, stage: str, out_dir: str,
     return m
 
 
-def build_stores(spark: SparkSession, docs: DataFrame, verify_extract: bool = False):
-    """documents -> (geo_nodes, geo_ways, geo_relations).
-
-    When ``verify_extract`` and the table carries html, re-derive text
-    from html (the invariant path); geocode keys off url/doc_id either way.
-    """
-    if verify_extract and "html" in docs.columns:
-        docs = extract.with_extracted_text(docs)
-    return geocode.geocode(docs)
-
-
 def build_features(nodes: DataFrame, ways: DataFrame, relations: DataFrame) -> DataFrame:
     node_feats = classify.classify_nodes(nodes)
     way_feats = classify.classify_ways(ways)
@@ -123,7 +112,7 @@ def pyramid_df(spark: SparkSession, docs: DataFrame, cfg: Config | None = None,
     whole (used by entry()/bench; run_pyramid adds resumability)."""
     cfg = cfg or default_config()
     zooms = zooms if zooms is not None else list(range(cfg.minzoom, cfg.maxzoom + 1))
-    nodes, ways, relations = build_stores(spark, docs)
+    nodes, ways, relations = geocode.geocode(docs)
     # assign_base_tiles consumes features through two filter branches
     # (points / geometries) — eager localCheckpoint so the
     # classify+assemble subtree executes once (run_pyramid gets the same
@@ -136,14 +125,12 @@ def pyramid_df(spark: SparkSession, docs: DataFrame, cfg: Config | None = None,
 
 def run_pyramid(spark: SparkSession, docs: DataFrame, out_dir: str,
                 cfg: Config | None = None, zooms: list | None = None,
-                resume: bool = True, per_zoom_stages: bool = False) -> DataFrame:
+                resume: bool = True) -> DataFrame:
     """Full z pyramid -> tiles DataFrame (z,x,y,tile,feature_count,...).
 
-    Writes checkpoints under ``out_dir`` and returns the union tiles DF
-    (read back from the checkpoint parquet — stable for downstream use).
-    ``per_zoom_stages=True`` checkpoints each zoom separately (finer
-    resume granularity at the cost of re-scanning the base table per
-    zoom); the default fuses all zooms into one rollup+encode job.
+    Writes checkpoints under ``out_dir`` and returns the tiles DF (read
+    back from the checkpoint parquet — stable for downstream use). All
+    zooms share one rollup+encode job and one z-partitioned checkpoint.
     """
     cfg = cfg or default_config()
     zooms = zooms if zooms is not None else list(range(cfg.minzoom, cfg.maxzoom + 1))
@@ -153,7 +140,7 @@ def run_pyramid(spark: SparkSession, docs: DataFrame, out_dir: str,
     # ---- stage 1: features (classify + assemble)
     feat_path = os.path.join(out_dir, "stage_features")
     if not (resume and _stage_done(feat_path)):
-        nodes, ways, relations = build_stores(spark, docs)
+        nodes, ways, relations = geocode.geocode(docs)
         features = build_features(nodes, ways, relations)
         _write_stage(features, feat_path)
         _lineage(spark, spark.read.parquet(feat_path), "features", metrics_dir)
@@ -175,25 +162,8 @@ def run_pyramid(spark: SparkSession, docs: DataFrame, out_dir: str,
         _lineage(spark, spark.read.parquet(base_path), "base_tiles", metrics_dir)
     base_assigned = spark.read.parquet(base_path)
 
-    # ---- stage 3: rollup + encode
-    if per_zoom_stages:
-        # one resumable stage per zoom level (north_rule) — the shape a
-        # week-long 100 TB run wants: a failed z re-runs alone.
-        tile_paths = []
-        for z in zooms:
-            zpath = os.path.join(out_dir, f"stage_tiles_z{z}")
-            tile_paths.append(zpath)
-            if resume and _stage_done(zpath):
-                continue
-            rolled = tileassign.rollup_to_zoom(base_assigned, z, cfg.basezoom, cfg=cfg)
-            tiles = encode_zoom(rolled, cfg)
-            _write_stage(tiles, zpath)
-            _lineage(spark, spark.read.parquet(zpath), f"tiles_z{z}", metrics_dir,
-                     hash_col="geometry_hash")
-        return spark.read.parquet(*tile_paths)
-
-    # fused path (default): the whole pyramid in one job — one scan of
-    # the base table, map-side-combined dedup, one encode shuffle.
+    # ---- stage 3: rollup + encode — the whole pyramid in one job: one
+    # scan of the base table, map-side-combined dedup, one encode shuffle.
     tiles_path = os.path.join(out_dir, "stage_tiles")
     if not (resume and _stage_done(tiles_path)):
         rolled = tileassign.rollup_all_zooms(base_assigned, zooms, cfg.basezoom, cfg=cfg)

@@ -345,7 +345,7 @@ def _run_probe_pipeline(spark, sf_dir, cfg, probe_fn, layer: str, kind: int):
     nodes, ways, rels = probe_fn(docs)
     feats = pipeline.build_features(nodes, ways, rels).localCheckpoint()
     assigned = tileassign.assign_base_tiles(feats, 14)
-    rolled = tileassign.rollup_to_zoom(assigned, 14, 14)
+    rolled = tileassign.rollup_all_zooms(assigned, [14], 14)
     tiles = pipeline.encode_zoom(rolled, cfg)
     wire = (tiles.select("x", "y", "tile")
             .mapInPandas(_wire_decoder((layer,), kind),
@@ -952,12 +952,13 @@ geomp AS (
 SELECT tx AS x, ty AS y,
   count(*) AS n_feats,
   count(*) AS n_close,
-  sum(5 + CASE WHEN amp > {SIMPLIFY_TOL_UNITS} THEN 1 ELSE 0 END) AS pts_in,
-  sum(3 * {_PX.format(lon='x0', x='tx')}
-      + 2 * {_PX.format(lon=f'(x0 + {_SQ})', x='tx')}
-      + CASE WHEN amp > {SIMPLIFY_TOL_UNITS}
-             THEN {_PX.format(lon=f'(x0 + {_SQ} + amp)', x='tx')}
-             ELSE 0 END) AS spx_in,
+  CAST(sum(5 + CASE WHEN amp > {SIMPLIFY_TOL_UNITS} THEN 1 ELSE 0 END)
+       AS BIGINT) AS pts_in,
+  CAST(sum(3 * {_PX.format(lon='x0', x='tx')}
+           + 2 * {_PX.format(lon=f'(x0 + {_SQ})', x='tx')}
+           + CASE WHEN amp > {SIMPLIFY_TOL_UNITS}
+                  THEN {_PX.format(lon=f'(x0 + {_SQ} + amp)', x='tx')}
+                  ELSE 0 END) AS BIGINT) AS spx_in,
   TRUE AS geom_ok
 FROM geomp GROUP BY 1, 2
 """
@@ -992,12 +993,13 @@ geomc AS (
 SELECT tx AS x, ty AS y,
   CAST(1 AS BIGINT) AS n_feats,
   count(*) AS n_parts,
-  sum(2 + CASE WHEN amp > {SIMPLIFY_TOL_UNITS} THEN 1 ELSE 0 END) AS pts_in,
-  sum({_PX.format(lon='x0', x='tx')}
-      + {_PX.format(lon='(x0 + 8000)', x='tx')}
-      + CASE WHEN amp > {SIMPLIFY_TOL_UNITS}
-             THEN {_PX.format(lon='(x0 + 4000)', x='tx')}
-             ELSE 0 END) AS spx_in
+  CAST(sum(2 + CASE WHEN amp > {SIMPLIFY_TOL_UNITS} THEN 1 ELSE 0 END)
+       AS BIGINT) AS pts_in,
+  CAST(sum({_PX.format(lon='x0', x='tx')}
+           + {_PX.format(lon='(x0 + 8000)', x='tx')}
+           + CASE WHEN amp > {SIMPLIFY_TOL_UNITS}
+                  THEN {_PX.format(lon='(x0 + 4000)', x='tx')}
+                  ELSE 0 END) AS BIGINT) AS spx_in
 FROM geomc GROUP BY 1, 2
 """
 
@@ -1032,8 +1034,8 @@ SELECT tx AS x, ty AS y,
   count(*) AS n_parts,
   count(*) AS n_close,
   5 * count(*) AS pts_in,
-  sum(3 * {_PX.format(lon='x0', x='tx')}
-      + 2 * {_PX.format(lon='(x0 + sq)', x='tx')}) AS spx_in,
+  CAST(sum(3 * {_PX.format(lon='x0', x='tx')}
+           + 2 * {_PX.format(lon='(x0 + sq)', x='tx')}) AS BIGINT) AS spx_in,
   TRUE AS geom_ok
 FROM geoms GROUP BY 1, 2
 """

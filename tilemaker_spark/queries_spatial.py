@@ -197,11 +197,17 @@ def _dbf_record_count(path: str) -> int:
     """Record count from a dBase III header (uint32 LE at offset 4) —
     ties the J8 oracle's id enumeration to the COMMITTED fixture, so a
     regenerated lines.dbf with a different line count cannot silently
-    diverge from the range the oracle walks."""
+    diverge from the range the oracle walks. Read at import, so a
+    missing or truncated fixture fails with its path named."""
     import struct
 
-    with open(path, "rb") as f:
-        return struct.unpack_from("<I", f.read(8), 4)[0]
+    try:
+        with open(path, "rb") as f:
+            return struct.unpack_from("<I", f.read(8), 4)[0]
+    except (OSError, struct.error) as e:
+        raise RuntimeError(
+            f"shapefile fixture {path} is missing or truncated; "
+            "regenerate it with scripts/gen_shp_fixture.py") from e
 
 
 _N_FIXTURE_LINES = _dbf_record_count(

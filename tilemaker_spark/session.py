@@ -58,8 +58,7 @@ def get_spark(app_name: str = "tilemaker_spark", cpus: int | None = None,
 # bytes puts the measured crossover (between 1x and 16x of sf0.1)
 # on the conservative side: ×64 replicated input (~107 MiB cached) is
 # firmly in scale mode.
-SMALL_INPUT_BYTES = int(os.environ.get("SPARK_GRAFT_SMALL_INPUT_BYTES",
-                                       str(32 * 1024 * 1024)))
+SMALL_INPUT_BYTES = 32 * 1024 * 1024
 
 _TRUSTED_LEAVES = {"LogicalRelation", "InMemoryRelation", "LocalRelation",
                    "HiveTableRelation"}
@@ -121,8 +120,8 @@ def is_small_input(df, input_bytes: int | None = None) -> bool:
     return input_bytes is not None and input_bytes < SMALL_INPUT_BYTES
 
 
-def python_stage_partitions(spark: SparkSession, multiplier: int = 8,
-                            input_df=None, input_bytes: int | None = None) -> int:
+def python_stage_partitions(spark: SparkSession, input_df=None,
+                            input_bytes: int | None = None) -> int:
     """Partition count for Python-CPU-heavy (mapInPandas) stages.
 
     AQE's coalescing is BYTE-based and blind to per-row Python CPU cost,
@@ -134,8 +133,8 @@ def python_stage_partitions(spark: SparkSession, multiplier: int = 8,
     cost" of the round-2 scaling fit was really this coarse-partition
     critical path, which grows with data and shrinks with nothing.
 
-    Explicit fine hash partitioning (cores x multiplier, never below the
-    session's shuffle partitions) bounds max-task at ~1/multiplier of a
+    Explicit fine hash partitioning (cores x 8, never below the
+    session's shuffle partitions) bounds max-task at ~1/8 of a
     core's share, so adding executors keeps helping; AQE is deliberately
     bypassed (explicit numPartitions is not coalesced).
 
@@ -154,4 +153,4 @@ def python_stage_partitions(spark: SparkSession, multiplier: int = 8,
     if input_df is not None or input_bytes is not None:
         if is_small_input(input_df, input_bytes):
             return max(par, base)
-    return max(par * multiplier, base)
+    return max(par * 8, base)

@@ -143,28 +143,6 @@ def assign_base_tiles(features: DataFrame, base_zoom: int = 14,
     return pts_assigned.unionByName(geoms_assigned)
 
 
-def rollup_to_zoom(base_assigned: DataFrame, zoom: int, base_zoom: int = 14,
-                   cfg=None) -> DataFrame:
-    """A2/A3: derive zoom-z tile content from the base-zoom assignment.
-
-    parent x = x >> (bz - z) (reference: src/tile_data.cpp:21-22 divides
-    by 2^(bz-z)). Distinct per feature (a feature covering many base
-    cells appears once per parent tile) — the A4 dedup semantic
-    (src/tile_data.cpp:135). ``cfg`` enables the same F8 sentinel
-    pushdown as rollup_all_zooms.
-    """
-    s = base_zoom - zoom
-    df = base_assigned.withColumn("z", F.lit(zoom)) \
-        .withColumn("x", F.shiftright("tile_x", s)) \
-        .withColumn("y", F.shiftright("tile_y", s))
-    if "feat_minzoom" in df.columns:
-        df = df.where(F.col("feat_minzoom") <= zoom)
-    if cfg is not None:
-        df = _sentinelize_out_of_range(df, cfg)
-    df, keys = _dedup_identity(df)
-    return df.dropDuplicates(keys).drop("_akd")
-
-
 def _sentinelize_out_of_range(df: DataFrame, cfg) -> DataFrame:
     """F8 pushdown BELOW the rollup dedup exchange, without breaking
     empty-tile parity. A rolled row whose layer is out of zoom range
